@@ -1,7 +1,7 @@
 """Seeded input tables for the benchmark, in the corpus's parquet layout.
 
 The engine reads ``<sf_dir>/<table>.parquet``. These generators write
-the three tables the benchmark's workloads read, with the schemas and
+the two tables the benchmark's workloads read, with the schemas and
 value shapes of the corpus described in TESTDATA.md and FIXTURES.md
 (section 2):
 
@@ -9,9 +9,7 @@ value shapes of the corpus described in TESTDATA.md and FIXTURES.md
   exponential prices, a JSON ``props`` quantity;
 - ``documents``: texts over a 30-word vocabulary, with ~5% near
   duplicates (an earlier text plus a ``dup`` token) and a few exact
-  copies, so the dedup ledgers have work;
-- ``embeddings``: unit vectors in 64 dimensions, weakly clustered by
-  label.
+  copies, as in the corpus.
 
 The same seed always writes the same bytes.
 """
@@ -77,26 +75,12 @@ def documents(rng: np.random.Generator, n: int) -> pa.Table:
     )
 
 
-def embeddings(rng: np.random.Generator, n: int, dim: int = 64) -> pa.Table:
-    labels = rng.integers(0, 10, n).astype(np.int32)
-    centers = rng.normal(0.0, 1.0, (10, dim))
-    v = 0.15 * centers[labels] + rng.normal(0.0, 1.0, (n, dim))
-    v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
-    return pa.table(
-        {
-            "vec_id": pa.array(np.arange(n, dtype=np.int64)),
-            "embedding": pa.array(list(v), pa.list_(pa.float32())),
-            "label": pa.array(labels),
-        }
-    )
-
-
 def write_tables(sf_dir: Path, seed: int, tables: dict[str, dict]) -> None:
     """Write each named table with its size arguments, e.g.
     ``{"events": {"n": 1000, "users": 15}}``; one child generator per
     table keeps a table's bytes independent of which others are asked."""
     sf_dir.mkdir(parents=True, exist_ok=True)
-    makers = {"events": events, "documents": documents, "embeddings": embeddings}
+    makers = {"events": events, "documents": documents}
     for name, size in tables.items():
         rng = np.random.default_rng([seed, list(makers).index(name)])
         pq.write_table(makers[name](rng, **size), sf_dir / f"{name}.parquet")

@@ -94,6 +94,12 @@ def loadavg() -> list[float]:
         return [float(x) for x in f.read().split()[:3]]
 
 
+def steal_s() -> float:
+    """CPU time the hypervisor gave to other guests, all CPUs, since boot."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / _TICK
+
+
 def stray_jvms() -> list[str]:
     """JVMs alive before this run starts its own (bench.py's check)."""
     from bench import _cmdline_has_java
@@ -106,6 +112,7 @@ def noise_start() -> dict:
         "nproc": len(os.sched_getaffinity(0)),
         "cwd": os.getcwd(),
         "loadavg_before": loadavg(),
+        "steal_s": steal_s(),
         "stray_jvms": stray_jvms(),
         "t_wall": time.time(),
     }

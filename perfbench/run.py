@@ -114,14 +114,17 @@ def main() -> int:
         if args.trace:
             import eventlog
 
-            res["layers"].update(wl.trace_layers(res, eventlog.load(run_dir / "eventlog")))
+            layers = wl.trace_layers(res, eventlog.load(run_dir / "eventlog"))
+            # task time per unit of work over the wall time of that work
+            layers["exec.core_util"] = layers["exec.task_run_s"] / (res["e2e"]["wall_s"] * CORES)
+            res["layers"].update(layers)
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
 
     setup_s = res["t_timed"] - T_START
     e2e = dict(res["e2e"], setup_s=setup_s)
     layers = dict(res["layers"], **{"session.start_s": start_s, "peak_rss_mb": sampler.peak_rss_mb})
-    noise.update(res["noise"], loadavg_after=procs.loadavg())
+    noise.update(res["noise"], loadavg_after=procs.loadavg(), steal_s=procs.steal_s() - noise["steal_s"])
     record = {
         "workload": args.workload,
         "seed": args.seed,

@@ -1,4 +1,4 @@
-"""Order statistics shared by the workloads."""
+"""The latency tail shared by the workloads."""
 
 from __future__ import annotations
 
@@ -12,8 +12,11 @@ def percentile(xs: list[float], p: float) -> float:
     return s[lo] + (s[hi] - s[lo]) * (k - lo)
 
 
-def tail(xs: list[float]) -> tuple[float, float]:
-    """(percentile, value): the highest percentile with at least ten
-    samples beyond it, never below the median."""
-    p = max(50.0, 100.0 * (1.0 - 10.0 / len(xs)))
-    return p, percentile(xs, p)
+def tail(xs: list[float]) -> tuple[str, float]:
+    """(statistic, value): the highest percentile with at least ten
+    samples beyond it; below twenty samples, where no percentile above
+    the median has ten beyond it, the largest sample."""
+    if len(xs) < 20:
+        return "max", max(xs)
+    p = 100.0 * (1.0 - 10.0 / len(xs))
+    return f"p{p:g}", percentile(xs, p)

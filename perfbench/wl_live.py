@@ -27,19 +27,20 @@ import threading
 import time
 from datetime import datetime
 from pathlib import Path
+from statistics import median
 
 import pyarrow.parquet as pq
 
 import eventlog
 import inputs
 import procs
-from stats import percentile, tail
+from stats import tail
 
 TABLES = {"events": {"n": 3000, "users": 30}}
-CORES = 4
 WARM_TICKS = 1200
-FILE_TICKS = 300
-GAP_S = 10.0
+FILE_TICKS = 100
+GAP_S = 13.0
+MIN_FILES = 2
 LAG_LIMIT_S = 30.0
 NODATA_WAIT_S = 8.0
 
@@ -79,64 +80,92 @@ def _epoch(progress: dict) -> float:
 
 class Replay:
     """Feeds files on schedule and follows the query until they are
-    committed; ``until`` is the supervisor's completion test."""
+    committed; ``until`` is the supervisor's completion test.
+
+    The timed phase is measured over busy spans only: a span opens when
+    a file is due while no span is open and closes when every renamed
+    file is committed and the no-data batch after the last one has run.
+    Wall and CPU time summed over the spans leave out the generator's
+    idle gaps, so they move with the pipeline's work, not its schedule.
+    """
 
     def __init__(self, files: list[Path], src: Path, n_timed: int):
         self.files, self.src, self.n_timed = files, src, n_timed
+        self.pid = os.getpid()
         self.renamed = 0
         self.due: list[float] = []
         self.late: list[float] = []
         self.backlog_max = 0
-        self.t_timed = self.t_end = None
+        self.t_timed = None
         self.warm_batches = 0
         self.progress: list[dict] = []
-        self._t_warm_commit = self._t_last_commit = None
+        self.busy_wall = self.busy_cpu = 0.0
+        self._span = None  # (due time, tree CPU) that opened the current span
+        self._t_commit = None  # when every renamed file was first committed
+        self._lock = threading.Lock()
         self._thread = threading.Thread(target=self._feed, daemon=True)
         self._drop(0)
 
     def _drop(self, i: int) -> None:
         os.rename(self.files[i], self.src / self.files[i].name)
         self.renamed = i + 1
+        self._t_commit = None
 
     def _feed(self) -> None:
         for k in range(self.n_timed):
             due = self.t_timed + k * GAP_S
             time.sleep(max(0.0, due - time.time()))
-            self._drop(1 + k)
-            self.due.append(due)
-            self.late.append(time.time() - due)
+            with self._lock:
+                if self._span is None:
+                    self._span = (due, procs.tree_cpu_s(self.pid))
+                self._drop(1 + k)
+                self.due.append(due)
+                self.late.append(time.time() - due)
+
+    def _settled(self, p: dict | None, idle: bool, now: float) -> float | None:
+        """End time of the work on every renamed file: the commit of the
+        no-data batch after the last one, once the query is idle; or
+        ``now`` when no such batch came within ``NODATA_WAIT_S``."""
+        if p is None or 1 + _log_offset(p) < self.renamed:
+            return None
+        self._t_commit = self._t_commit or now
+        if not idle:
+            return None
+        if p["numInputRows"] == 0 and "addBatch" in p["durationMs"]:
+            return _epoch(p)
+        return now if now - self._t_commit > NODATA_WAIT_S else None
+
+    def _close(self, end: float) -> None:
+        self.busy_wall += end - self._span[0]
+        self.busy_cpu += procs.tree_cpu_s(self.pid) - self._span[1]
+        self._span = None
 
     def until(self, q) -> bool:
         p = q.lastProgress
         p = _plain(p) if p else None
-        committed = 1 + _log_offset(p) if p else 0
         idle = not q.status["isTriggerActive"] and not q.status["isDataAvailable"]
         now = time.time()
-        if self.t_timed is None:
-            if committed < 1:
+        with self._lock:
+            if self.t_timed is None:
+                if self._settled(p, idle, now) is not None:
+                    self.warm_batches = len(q.recentProgress)
+                    # the 1 s trigger fires on whole epoch seconds: files
+                    # due 0.1 s before one wait the same for it every time
+                    self.t_timed = math.ceil(now + 0.2) - 0.1
+                    self._thread.start()
                 return False
-            self._t_warm_commit = self._t_warm_commit or now
-            nodata_done = p["numInputRows"] == 0
-            if idle and (nodata_done or now - self._t_warm_commit > NODATA_WAIT_S):
-                self.warm_batches = len(q.recentProgress)
-                # the 1 s trigger fires on whole epoch seconds: files due
-                # 0.1 s before one wait the same for it every time
-                self.t_timed = math.floor(now) + 1.9
-                self._thread.start()
-            return False
-        self.backlog_max = max(self.backlog_max, self.renamed - committed)
-        if self._thread.is_alive():
-            return False
-        if committed >= len(self.due) + 1:
-            self._t_last_commit = self._t_last_commit or now
-            if idle and (p["numInputRows"] == 0 or now - self._t_last_commit > NODATA_WAIT_S):
-                self.t_end = now
+            committed = 1 + _log_offset(p) if p else 0
+            self.backlog_max = max(self.backlog_max, self.renamed - committed)
+            if self._span is not None and (end := self._settled(p, idle, now)) is not None:
+                self._close(end)
+            if self._thread.is_alive():
+                return False
+            if self._span is None:
+                return True
+            if now > self.due[-1] + LAG_LIMIT_S:
+                self._close(now)
                 return True
             return False
-        if now > self.due[-1] + LAG_LIMIT_S:
-            self.t_end = now
-            return True
-        return False
 
 
 def _rollup(led):
@@ -215,21 +244,16 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
     src = run_dir / "src"
     src.mkdir()
     files = _stage(sf, run_dir / "stage")
-    n_timed = min(len(files) - 1, int(seconds // GAP_S) + 1)
+    n_timed = min(len(files) - 1, max(MIN_FILES, math.ceil(seconds / GAP_S)))
 
     t = time.time()
     replay = Replay(files, src, n_timed)
     start, ledger_dir, summary_dir = live_tick_pipeline(spark, str(src), str(sf), str(run_dir / "out"))
     define_s = time.time() - t
-    cpu = {}
 
     def until(q) -> bool:
-        was_timed = replay.t_timed is not None
         done = replay.until(q)
-        if replay.t_timed is not None and not was_timed:
-            cpu["start"] = procs.tree_cpu_s(os.getpid())
         if done:
-            cpu["end"] = procs.tree_cpu_s(os.getpid())
             replay.progress = [_plain(p) for p in q.recentProgress]
         return done
 
@@ -242,10 +266,7 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
     lat = []
     for k, due in enumerate(replay.due):
         off = 1 + k
-        hit = next(
-            (p for p in timed if _log_offset(p) >= off),
-            None,
-        )
+        hit = next((p for p in timed if _log_offset(p) >= off), None)
         lag = _epoch(hit) - due if hit else None
         if lag is None or lag > LAG_LIMIT_S:
             failures.append(f"live: file {off} not committed within {LAG_LIMIT_S} s")
@@ -258,8 +279,8 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
     data = [p for p in timed if p["numInputRows"] > 0]
     nodata = [p for p in timed if p["numInputRows"] == 0 and "addBatch" in p["durationMs"]]
     trig = lambda ps: [p["durationMs"]["triggerExecution"] / 1000.0 for p in ps]  # noqa: E731
-    wall = replay.t_end - replay.t_timed
-    tail_p, tail_v = tail(lat) if lat else (50.0, LAG_LIMIT_S)
+    n = max(1, len(replay.due))
+    tail_p, tail_v = tail(lat) if lat else ("max", LAG_LIMIT_S)
     res = {
         "t_timed": replay.t_timed,
         "attempted": len(replay.due),
@@ -267,17 +288,25 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
         "failures": failures,
         "progress": timed,
         "e2e": {
-            "wall_s": wall,
-            "cpu_s": (cpu["end"] - cpu["start"]) / max(1, len(replay.due)),
-            "latency_s_p50": percentile(lat, 50) if lat else LAG_LIMIT_S,
+            "wall_s": replay.busy_wall / n,
+            "cpu_s": replay.busy_cpu / n,
+            "latency_s_p50": median(lat) if lat else LAG_LIMIT_S,
             "latency_s_tail": tail_v,
-            "build_s_p50": percentile(trig(data), 50) if data else 0.0,
-            "probe_s_p50": percentile(trig(nodata), 50) if nodata else 0.0,
+            "build_s_p50": median(trig(data)) if data else 0.0,
+            "probe_s_p50": median(trig(nodata)) if nodata else 0.0,
         },
-        "layers": {"session.warm_s": replay.t_timed - t - define_s, "streaming.define_s": define_s},
+        "layers": {
+            "session.warm_s": replay.t_timed - t - define_s,
+            "streaming.define_s": define_s,
+        },
         "noise": {
             "generator_late_s": replay.late,
-            "latency_tail_pct": tail_p,
+            # (log offset, input rows, seconds) of every timed micro-batch
+            "batches": [
+                (_log_offset(p), p["numInputRows"], p["durationMs"]["triggerExecution"] / 1000.0)
+                for p in timed
+            ],
+            "latency_tail_stat": tail_p,
             "latency_n": len(lat),
             "restarts": report["restarts"],
         },
@@ -295,14 +324,13 @@ def trace_layers(res: dict, events: list[dict]) -> dict:
     n = max(1, res["attempted"])
     out = {k: v / n for k, v in log.totals(jobs).items()}
     out.update({k: v / n for k, v in log.plan_totals(jobs).items()})
-    out["exec.core_util"] = out["exec.task_run_s"] * n / (res["e2e"]["wall_s"] * CORES)
     out["sources.sink_write_s"] = sum(j["t1"] - j["t0"] for j in jobs if log.writes(j)) / 1e3 / n
     return out
 
 
 def stream_layers(replay: Replay, data: list[dict], nodata: list[dict], out: Path) -> dict:
     def med(ps, key):
-        return percentile([key(p) for p in ps], 50) if ps else 0.0
+        return median(key(p) for p in ps) if ps else 0.0
 
     def state(p, field):
         return sum(s.get(field, 0) for s in p["stateOperators"])
