@@ -6,11 +6,16 @@ processing-time trigger and its ledger and daily-summary sinks.
 The ticks are cut in event-time order into one warm-up file of
 ``WARM_TICKS`` (enough history for the trailing z-score that trades
 close in the warm-up and in every timed file) and files of
-``FILE_TICKS``, written
-ahead of time to a staging directory. The warm-up file runs through
-the query during set-up. In the timed phase a generator thread renames one
-file into the source directory every ``GAP_S`` seconds, on a fixed
-schedule that does not wait for the query. A file's latency runs from
+``FILE_TICKS``, written ahead of time to a staging directory. The keys
+are many enough that every no-data batch closes trades: each key's
+last tick is held back until the watermark passes it, so the no-data
+batch after a file releases one tick per key, and with few keys
+whether any of them closes a trade (and the batch runs its sinks)
+varies from file to file. The warm-up file runs through the query
+during set-up. In the timed phase a generator thread renames one file
+into the source directory every ``GAP_S`` seconds, on a fixed schedule
+that does not wait for the query, at least ``MIN_FILES`` files so the
+per-file medians are not set by one file. A file's latency runs from
 when it was due to the commit of the micro-batch that read it: the
 first progress entry whose ``sources[0].endOffset.logOffset`` covers
 the file's offset in the file-source log (batch ids do not match log
@@ -29,6 +34,7 @@ from datetime import datetime
 from pathlib import Path
 from statistics import median
 
+import numpy as np
 import pyarrow.parquet as pq
 
 import eventlog
@@ -36,17 +42,25 @@ import inputs
 import procs
 from stats import tail
 
-TABLES = {"events": {"n": 3000, "users": 30}}
-WARM_TICKS = 1200
-FILE_TICKS = 100
-GAP_S = 13.0
+USERS = 200
+WARM_TICKS = 8000
+FILE_TICKS = 1000
+GAP_S = 12.0
 MIN_FILES = 2
 LAG_LIMIT_S = 30.0
 NODATA_WAIT_S = 8.0
 
 
-def make_inputs(sf_dir: Path, seed: int) -> None:
-    inputs.write_tables(sf_dir, seed, TABLES)
+def _n_timed(seconds: float) -> int:
+    return max(MIN_FILES, math.ceil(seconds / GAP_S))
+
+
+def _tables(seconds: float) -> dict:
+    return {"events": {"n": WARM_TICKS + _n_timed(seconds) * FILE_TICKS, "users": USERS}}
+
+
+def make_inputs(sf_dir: Path, seed: int, seconds: float) -> None:
+    inputs.write_tables(sf_dir, seed, _tables(seconds))
 
 
 def _stage(sf_dir: Path, stage: Path) -> list[Path]:
@@ -72,6 +86,16 @@ def _log_offset(p: dict) -> int:
     return end["logOffset"] if end else -1
 
 
+def _trades(ledger_dir: Path) -> dict[int, int]:
+    """Ledger rows each micro-batch wrote, by batch id: the sink writes
+    every epoch into its own ``batch_id=<epoch>`` partition."""
+    out: dict[int, int] = {}
+    for f in ledger_dir.glob("batch_id=*/**/*.parquet"):
+        epoch = int(f.relative_to(ledger_dir).parts[0].split("=")[1])
+        out[epoch] = out.get(epoch, 0) + pq.ParquetFile(f).metadata.num_rows
+    return out
+
+
 def _epoch(progress: dict) -> float:
     """Wall time at which a progress entry's micro-batch committed."""
     start = datetime.fromisoformat(progress["timestamp"].replace("Z", "+00:00"))
@@ -85,8 +109,10 @@ class Replay:
     The timed phase is measured over busy spans only: a span opens when
     a file is due while no span is open and closes when every renamed
     file is committed and the no-data batch after the last one has run.
-    Wall and CPU time summed over the spans leave out the generator's
-    idle gaps, so they move with the pipeline's work, not its schedule.
+    Each file is charged the wall and CPU time of its span (shared
+    equally when files queue into one span), so the generator's idle
+    gaps are left out and the figures move with the pipeline's work,
+    not its schedule.
     """
 
     def __init__(self, files: list[Path], src: Path, n_timed: int):
@@ -99,8 +125,15 @@ class Replay:
         self.t_timed = None
         self.warm_batches = 0
         self.progress: list[dict] = []
-        self.busy_wall = self.busy_cpu = 0.0
-        self._span = None  # (due time, tree CPU) that opened the current span
+        # per timed file: wall and CPU seconds of the busy span it was
+        # in, shared equally when files queue into one span
+        self.file_wall: list[float] = []
+        self.file_cpu: list[float] = []
+        # (time, tree CPU) at every poll of the timed phase, to price
+        # each micro-batch in CPU seconds
+        self.cpu_trace: list[tuple[float, float]] = []
+        # (due time, tree CPU, files renamed before it) of the open span
+        self._span = None
         self._t_commit = None  # when every renamed file was first committed
         self._lock = threading.Lock()
         self._thread = threading.Thread(target=self._feed, daemon=True)
@@ -117,7 +150,7 @@ class Replay:
             time.sleep(max(0.0, due - time.time()))
             with self._lock:
                 if self._span is None:
-                    self._span = (due, procs.tree_cpu_s(self.pid))
+                    self._span = (due, procs.tree_cpu_s(self.pid), self.renamed)
                 self._drop(1 + k)
                 self.due.append(due)
                 self.late.append(time.time() - due)
@@ -136,9 +169,18 @@ class Replay:
         return now if now - self._t_commit > NODATA_WAIT_S else None
 
     def _close(self, end: float) -> None:
-        self.busy_wall += end - self._span[0]
-        self.busy_cpu += procs.tree_cpu_s(self.pid) - self._span[1]
+        k = self.renamed - self._span[2]
+        self.file_wall += [(end - self._span[0]) / k] * k
+        self.file_cpu += [(procs.tree_cpu_s(self.pid) - self._span[1]) / k] * k
         self._span = None
+
+    def batch_cpu_s(self, p: dict) -> float:
+        """Tree CPU seconds over a micro-batch, interpolated between the
+        polls around its start and commit."""
+        ts, cpu = zip(*self.cpu_trace)
+        end = _epoch(p)
+        start = end - p["durationMs"]["triggerExecution"] / 1000.0
+        return float(np.interp(end, ts, cpu) - np.interp(start, ts, cpu))
 
     def until(self, q) -> bool:
         p = q.lastProgress
@@ -152,8 +194,10 @@ class Replay:
                     # the 1 s trigger fires on whole epoch seconds: files
                     # due 0.1 s before one wait the same for it every time
                     self.t_timed = math.ceil(now + 0.2) - 0.1
+                    self.cpu_trace.append((now, procs.tree_cpu_s(self.pid)))
                     self._thread.start()
                 return False
+            self.cpu_trace.append((now, procs.tree_cpu_s(self.pid)))
             committed = 1 + _log_offset(p) if p else 0
             self.backlog_max = max(self.backlog_max, self.renamed - committed)
             if self._span is not None and (end := self._settled(p, idle, now)) is not None:
@@ -244,7 +288,7 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
     src = run_dir / "src"
     src.mkdir()
     files = _stage(sf, run_dir / "stage")
-    n_timed = min(len(files) - 1, max(MIN_FILES, math.ceil(seconds / GAP_S)))
+    n_timed = _n_timed(seconds)
 
     t = time.time()
     replay = Replay(files, src, n_timed)
@@ -276,10 +320,10 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
     if not check(spark, str(sf), ledger_dir, summary_dir, failures):
         failed = len(replay.due)
 
+    trades = _trades(Path(ledger_dir))
     data = [p for p in timed if p["numInputRows"] > 0]
     nodata = [p for p in timed if p["numInputRows"] == 0 and "addBatch" in p["durationMs"]]
     trig = lambda ps: [p["durationMs"]["triggerExecution"] / 1000.0 for p in ps]  # noqa: E731
-    n = max(1, len(replay.due))
     tail_p, tail_v = tail(lat) if lat else ("max", LAG_LIMIT_S)
     res = {
         "t_timed": replay.t_timed,
@@ -288,12 +332,14 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
         "failures": failures,
         "progress": timed,
         "e2e": {
-            "wall_s": replay.busy_wall / n,
-            "cpu_s": replay.busy_cpu / n,
+            "wall_s": median(replay.file_wall) if replay.file_wall else 0.0,
+            "cpu_s": median(replay.file_cpu) if replay.file_cpu else 0.0,
             "latency_s_p50": median(lat) if lat else LAG_LIMIT_S,
             "latency_s_tail": tail_v,
             "build_s_p50": median(trig(data)) if data else 0.0,
             "probe_s_p50": median(trig(nodata)) if nodata else 0.0,
+            "build_cpu_s_p50": median(map(replay.batch_cpu_s, data)) if data else 0.0,
+            "probe_cpu_s_p50": median(map(replay.batch_cpu_s, nodata)) if nodata else 0.0,
         },
         "layers": {
             "session.warm_s": replay.t_timed - t - define_s,
@@ -301,9 +347,15 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
         },
         "noise": {
             "generator_late_s": replay.late,
-            # (log offset, input rows, seconds) of every timed micro-batch
+            # (log offset, input rows, seconds, trades written) of every
+            # timed micro-batch
             "batches": [
-                (_log_offset(p), p["numInputRows"], p["durationMs"]["triggerExecution"] / 1000.0)
+                (
+                    _log_offset(p),
+                    p["numInputRows"],
+                    p["durationMs"]["triggerExecution"] / 1000.0,
+                    trades.get(p["batchId"], 0),
+                )
                 for p in timed
             ],
             "latency_tail_stat": tail_p,

@@ -8,10 +8,14 @@ probed many times, priced as two operation types.
 One operation is one builder call (``Query.fn``) plus a collect of
 its result, so the output of every timed call is checked against the
 oracle, not only that of the cold set-up call: the timed calls take
-the warm path through memoized state. The timed phase runs whole
-passes over every operation, each in an order drawn from the seed,
-until ``--seconds`` have passed and at least ``MIN_PASSES`` passes are
-done.
+the warm path through memoized state. Set-up calls each entry once
+cold, then runs ``WARM_PASSES`` untimed passes, because the first warm
+calls are still much slower than later ones (the JVM compiles its hot
+paths over the first passes). The timed phase runs whole passes over
+every operation, in one order drawn from the seed, until ``--seconds``
+have passed and at least ``MIN_PASSES`` passes are done. Every
+end-to-end figure is a median over passes or operations, so one
+disturbed pass does not move it.
 """
 
 from __future__ import annotations
@@ -32,27 +36,22 @@ BUILDS = ["dsir_stats_build"]
 PROBES = ["dsir_select"]
 OPS = [(n, "build") for n in BUILDS] + [(n, "probe") for n in PROBES]
 TABLES = {"documents": {"n": 300}}
-MIN_PASSES = 2
+WARM_PASSES = 2
+MIN_PASSES = 3
 
 
-def make_inputs(sf_dir: Path, seed: int) -> None:
+def make_inputs(sf_dir: Path, seed: int, seconds: float) -> None:
     inputs.write_tables(sf_dir, seed, TABLES)
 
 
-def _order(rng: random.Random) -> list[tuple[str, str]]:
-    ops = list(OPS)
-    rng.shuffle(ops)
-    return ops
-
-
-def _type_medians(ops: list[dict], kind: str | None = None) -> list[float]:
-    """Median latency of each operation type. The types' latencies sit
-    apart, so a median over raw samples jumps between neighbouring
-    types from run to run; over per-type medians it does not."""
+def _type_medians(ops: list[dict], kind: str | None = None, key: str = "latency_s") -> list[float]:
+    """Median of ``key`` over each operation type. The types sit apart,
+    so a median over raw samples jumps between neighbouring types from
+    run to run; over per-type medians it does not."""
     per: dict[str, list[float]] = {}
     for o in ops:
         if kind in (None, o["kind"]):
-            per.setdefault(o["name"], []).append(o["latency_s"])
+            per.setdefault(o["name"], []).append(o[key])
     return [median(v) for v in per.values()]
 
 
@@ -68,7 +67,13 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
     reg = registry()
     sc = spark.sparkContext
     sf = str(run_dir / "data")
-    rng = random.Random(seed)
+    # one order, drawn from the seed, for every pass: dsir_select pays
+    # to re-cache what dsir_stats_build released, so a probe right
+    # after a build costs ~30% more than one after a probe; a fresh
+    # order per pass would make the probe median depend on how many
+    # passes happened to start with the op the last one ended with
+    order = list(OPS)
+    random.Random(seed).shuffle(order)
     failures: list[str] = []
     bad: set[str] = set()
 
@@ -86,18 +91,30 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
             failures.append(f"{name} (cold): {e!r:.300}")
             bad.add(name)
         cold_s[name] = time.time() - cold_s[name]
+    for k in range(WARM_PASSES):
+        for name, _ in order:
+            sc.setJobGroup(f"warm{k}:{name}", name)
+            try:
+                reg[name].fn(spark, sf).toPandas()
+            except Exception as e:
+                failures.append(f"{name} (warm-up): {e!r:.300}")
+                bad.add(name)
     warm_s = time.time() - t
 
     ops: list[dict] = []
+    pass_wall: list[float] = []
+    pass_cpu: list[float] = []
     t_timed = time.time()
-    cpu0 = procs.tree_cpu_s(os.getpid())
     passes = 0
-    # at least two passes, so no type's median rests on one sample
     while passes < MIN_PASSES or time.time() - t_timed < seconds:
-        for name, kind in _order(rng):
+        t_pass = time.time()
+        cpu_pass = procs.tree_cpu_s(os.getpid())
+        for name, kind in order:
             op = {"name": name, "kind": kind, "group": f"{passes}:{name}"}
             sc.setJobGroup(op["group"] + ":builder", name)
             t0 = time.time()
+            cpu0 = procs.tree_cpu_s(os.getpid())
+            steal0 = procs.steal_s()
             t1 = None
             try:
                 df = reg[name].fn(spark, sf)
@@ -109,13 +126,19 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
                 failures.append(f"{name}: {e!r:.300}")
                 op["ok"] = False
             t2 = time.time()
-            op.update(latency_s=t2 - t0, builder_s=(t1 or t2) - t0, exec_s=t2 - (t1 or t2))
+            op.update(
+                latency_s=t2 - t0,
+                cpu_s=procs.tree_cpu_s(os.getpid()) - cpu0,
+                builder_s=(t1 or t2) - t0,
+                exec_s=t2 - (t1 or t2),
+                steal_s=procs.steal_s() - steal0,
+            )
             if trace:
                 op["persisted_rdds"] = sc._jsc.getPersistentRDDs().size()
             ops.append(op)
+        pass_wall.append(time.time() - t_pass)
+        pass_cpu.append(procs.tree_cpu_s(os.getpid()) - cpu_pass)
         passes += 1
-    wall = time.time() - t_timed
-    cpu = procs.tree_cpu_s(os.getpid()) - cpu0
     sc.setJobGroup("after", "after")
 
     layers = {"session.warm_s": warm_s}
@@ -149,7 +172,12 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
         o["ok"] = good
     failed = sum(1 for o in ops if not o["ok"] or o["name"] in bad)
     lat = [o["latency_s"] for o in ops]
-    tail_p, tail_v = tail(lat)
+    if len(lat) < 20:
+        # no percentile above the median has ten samples beyond it:
+        # the slowest type's median, steadier than the largest sample
+        tail_p, tail_v = "slowest_type_median", max(_type_medians(ops))
+    else:
+        tail_p, tail_v = tail(lat)
     return {
         "t_timed": t_timed,
         "attempted": len(ops),
@@ -158,12 +186,14 @@ def run(spark, run_dir: Path, seed: int, seconds: float, trace: bool) -> dict:
         "ops": ops,
         "passes": passes,
         "e2e": {
-            "wall_s": wall / passes,
-            "cpu_s": cpu / passes,
+            "wall_s": median(pass_wall),
+            "cpu_s": median(pass_cpu),
             "latency_s_p50": median(_type_medians(ops)),
             "latency_s_tail": tail_v,
             "build_s_p50": median(_type_medians(ops, "build")),
             "probe_s_p50": median(_type_medians(ops, "probe")),
+            "build_cpu_s_p50": median(_type_medians(ops, "build", "cpu_s")),
+            "probe_cpu_s_p50": median(_type_medians(ops, "probe", "cpu_s")),
         },
         "layers": layers,
         "noise": {"cold_s": cold_s, "latency_tail_stat": tail_p, "latency_n": len(lat), "passes": passes},
